@@ -1015,11 +1015,15 @@ def nation_yoy_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts under it at driver SFs; revenue is PRE-AGGREGATED to
     (custkey, year) BEFORE the customer join (guide §2.3 — the r12
     rewrite: the previous shape shuffled the full lineitem-grain rows
-    into a customer SortMergeJoin; now the join input is bounded by
-    |customers|×|years| partials, 4 exchanges → 3 with the fact-grain
-    one gone), customer⋈nation is a broadcast chain; the trend window
-    partitions by nation over the AGGREGATED (nation, year) table —
-    tiny. Both aggs are map-side combinable.
+    into the customer join; now the fact-grain rows no longer reach
+    that join, whose input is bounded by |customers|×|years| partials.
+    The rewrite ADDS one exchange: the map-side-combined (custkey,
+    year) aggregate shuffles its partials, and one more exchange
+    re-keys them on custkey below the customer join — 4 → 5 in
+    plans/r12/nation_yoy_revenue_{before,after}.txt, 2 → 3 in
+    tests/plan_pins.json), customer⋈nation is a broadcast chain; the
+    trend window partitions by nation over the AGGREGATED (nation,
+    year) table — tiny. Both aggs are map-side combinable.
     """
     n = load_table(spark, sf_dir, "nation").select(
         "n_nationkey", F.col("n_name").alias("nation")
