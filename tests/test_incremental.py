@@ -594,3 +594,205 @@ def test_compact_parquet_skips_swap_debris_partitions(spark, sf_dir, tmp_path):
     assert back.count() == n  # p0 restored, p1 not double-counted
     assert os.path.isdir(p0)
     assert not os.path.exists(p0 + "._old")
+
+
+# --- run accounting from the commit log and the writes' observations ----
+
+
+def _fact_path(out_dir):
+    return os.path.join(out_dir, "fact_media_engagement")
+
+
+def _scan_hwm(spark, fact_path):
+    from wistia_data_pipeline_project_spark.operators.incremental import (
+        read_fact_committed,
+    )
+
+    committed = read_fact_committed(spark, fact_path)
+    if committed is None:
+        return None
+    return committed.agg(F.max("last_event_timestamp")).head()[0]
+
+
+def _committed_rows(spark, fact_path):
+    from wistia_data_pipeline_project_spark.operators.incremental import (
+        read_fact_committed,
+    )
+
+    committed = read_fact_committed(spark, fact_path)
+    return committed.count() if committed is not None else 0
+
+
+def _three_runs(spark, out_dir):
+    """(kind, run) for an initial load, an increment and a replay, in
+    that order; ``run()`` runs the pipeline and returns its counts."""
+    ev, md = _dfs(spark)
+    batch1 = ev.filter(
+        (F.col("received_at") < F.lit(CUT)) | F.col("received_at").isNull()
+    )
+
+    def runner(events):
+        return lambda: run_incremental_pipeline(spark, events, md, out_dir, RUN_TS)
+
+    return [
+        ("initial", runner(batch1)),
+        ("increment", runner(ev)),
+        ("replay", runner(ev)),
+    ]
+
+
+def test_manifest_hwm_equals_scan_hwm(spark, out_dir):
+    """Every run commits its observed ``rows``/``hwm_us``; the HWM taken
+    from those stats equals a scan of the committed files after each
+    run kind, and the stats are usable (no scan needed)."""
+    from wistia_data_pipeline_project_spark.operators.incremental import (
+        committed_high_water_mark,
+        manifest_high_water_mark,
+        read_manifests,
+    )
+
+    fp = _fact_path(out_dir)
+    for kind, run in _three_runs(spark, out_dir):
+        run()
+        assert all({"rows", "hwm_us"} <= set(m) for m in read_manifests(fp)), kind
+        usable, hwm = manifest_high_water_mark(fp)
+        assert usable, kind
+        assert hwm is not None and hwm == _scan_hwm(spark, fp), kind
+        assert committed_high_water_mark(spark, fp) == hwm, kind
+
+
+def test_hwm_falls_back_to_scan_on_old_manifest(spark, out_dir):
+    """A manifest written before the stats existed (no ``hwm_us``)
+    sends the HWM to the scan; the next run still reads the old
+    manifest, and the rows it reports are the rows it committed."""
+    import glob
+    import json
+
+    from wistia_data_pipeline_project_spark.operators.incremental import (
+        committed_high_water_mark,
+        manifest_high_water_mark,
+    )
+
+    fp = _fact_path(out_dir)
+    (_, initial), (_, increment), _ = _three_runs(spark, out_dir)
+    initial()
+    (m,) = glob.glob(os.path.join(fp, "_commits", "*.json"))
+    with open(m) as fh:
+        old = json.load(fh)
+    with open(m, "w") as fh:
+        json.dump({"run_id": old["run_id"], "files": old["files"]}, fh)
+    assert manifest_high_water_mark(fp) == (False, None)
+    assert committed_high_water_mark(spark, fp) == _scan_hwm(spark, fp)
+
+    before = _committed_rows(spark, fp)
+    counts = increment()
+    assert counts["fact_appended"] > 0
+    assert counts["fact_appended"] == _committed_rows(spark, fp) - before
+    # the old manifest still lacks the stat: the scan stays in charge
+    assert manifest_high_water_mark(fp)[0] is False
+    assert committed_high_water_mark(spark, fp) == _scan_hwm(spark, fp)
+
+
+def test_hwm_falls_back_to_scan_on_migrated_legacy_table(spark, out_dir):
+    """A plain-append table migrated into the commit log: the legacy
+    manifest carries no stats, so the HWM is the scan's."""
+    import shutil
+
+    from wistia_data_pipeline_project_spark.operators.incremental import (
+        committed_high_water_mark,
+        manifest_high_water_mark,
+    )
+
+    fp = _fact_path(out_dir)
+    (_, initial), (_, increment), _ = _three_runs(spark, out_dir)
+    initial()
+    shutil.rmtree(os.path.join(fp, "_commits"))  # now a legacy table
+    hwm_legacy = _scan_hwm(spark, fp)
+    assert manifest_high_water_mark(fp) == (False, None)
+    assert committed_high_water_mark(spark, fp) == hwm_legacy
+
+    increment()  # migrates, then appends the increment
+    assert os.path.exists(os.path.join(fp, "_commits", "00000000-legacy.json"))
+    assert manifest_high_water_mark(fp) == (False, None)
+    hwm = committed_high_water_mark(spark, fp)
+    assert hwm == _scan_hwm(spark, fp) and hwm > hwm_legacy
+
+
+def test_hwm_falls_back_to_scan_when_committed_file_is_gone(spark, out_dir):
+    """A committed file deleted behind the commit log's back: the
+    manifest max would still cover its rows, so the HWM must come from
+    a scan of what is left."""
+    import pyarrow.parquet as pq
+
+    from wistia_data_pipeline_project_spark.operators.incremental import (
+        committed_high_water_mark,
+        list_committed_files,
+        manifest_high_water_mark,
+    )
+
+    fp = _fact_path(out_dir)
+    (_, initial), _, _ = _three_runs(spark, out_dir)
+    initial()
+    usable, stat_hwm = manifest_high_water_mark(fp)
+    assert usable
+    files = [os.path.join(fp, f) for f in list_committed_files(fp)]
+    assert len(files) > 1
+
+    def file_max(f):
+        ts = pq.read_table(f, columns=["last_event_timestamp"]).column(0)
+        return max(t for t in ts.to_pylist() if t is not None)
+
+    newest = max(files, key=file_max)
+    os.remove(newest)
+    assert manifest_high_water_mark(fp) == (False, None)
+    hwm = committed_high_water_mark(spark, fp)
+    assert hwm == _scan_hwm(spark, fp) and hwm < stat_hwm
+
+
+def test_returned_counts_equal_written_tables(spark, out_dir):
+    """The counts a run returns come from its writes' observations;
+    they equal the dims re-read from disk and the committed-fact delta
+    for every run kind."""
+    from wistia_data_pipeline_project_spark.operators.incremental import (
+        read_manifests,
+    )
+
+    fp = _fact_path(out_dir)
+    for kind, run in _three_runs(spark, out_dir):
+        before = _committed_rows(spark, fp)
+        counts = run()
+        assert counts == {
+            "dim_media": spark.read.parquet(os.path.join(out_dir, "dim_media")).count(),
+            "dim_visitor": spark.read.parquet(
+                os.path.join(out_dir, "dim_visitor")
+            ).count(),
+            "fact_appended": _committed_rows(spark, fp) - before,
+            "contract_passed": 1,
+        }, kind
+        assert read_manifests(fp)[-1]["rows"] == counts["fact_appended"], kind
+    assert counts["fact_appended"] == 0  # the replay
+
+
+# Spark jobs a replay may start at the test session's config (8 cores,
+# the fixture tables): visitor-dim eager checkpoint, both dim writes
+# and the staged fact write. A re-count of any table or a scan for the
+# HWM adds at least one job.
+REPLAY_JOB_BUDGET = 11
+
+
+def test_replay_job_budget(spark, out_dir):
+    sc = spark.sparkContext
+    (_, initial), (_, increment), (_, replay) = _three_runs(spark, out_dir)
+    initial()
+    increment()
+    group = f"replay-budget-{os.getpid()}"
+    sc.setJobGroup(group, "replay job budget")
+    try:
+        counts = replay()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert counts["fact_appended"] == 0
+    assert 0 < jobs <= REPLAY_JOB_BUDGET, jobs

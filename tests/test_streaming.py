@@ -220,6 +220,47 @@ def test_streaming_watch_time_out_of_order_arrival(spark, tmp_path):
         assert got["last_event_timestamp"] == exp["last_event_timestamp"], k
 
 
+def test_streaming_watch_time_never_exceeds_duration(spark, tmp_path):
+    """The stateful emit applies the batch folds' cents rule: a clamped
+    rewatch of a 307.415 s media emits 307.41 s, not 307.42 s."""
+    import datetime as dt
+
+    from tests.wistia_fixtures import capped_rewatch
+    from wistia_data_pipeline_project_spark.operators.dims import (
+        transform_media_data,
+    )
+    from wistia_data_pipeline_project_spark.schemas import (
+        WISTIA_MEDIA_SCHEMA,
+        nullable_copy,
+    )
+    from wistia_data_pipeline_project_spark.streaming.pipeline import (
+        streaming_watch_time,
+    )
+
+    base_media = make_media()
+    media, events = capped_rewatch(base_media, make_events(base_media))
+    path = tmp_path / "capped"
+    path.mkdir()
+    with open(path / "events_0.jsonl", "w") as f:
+        for e in events:
+            f.write(json.dumps(e, default=lambda o: o.isoformat()) + "\n")
+    run_ts = dt.datetime(2025, 5, 20, 12, tzinfo=dt.timezone.utc)
+    dim = transform_media_data(
+        spark.createDataFrame(media, nullable_copy(WISTIA_MEDIA_SCHEMA)), run_ts
+    )
+    q = run_stream_to_memory(
+        streaming_watch_time(_read_stream(spark, str(path)), dim, watermark="30 days"),
+        "watch_time_capped_stream",
+        output_mode="update",
+    )
+    try:
+        rows = spark.table("watch_time_capped_stream").collect()
+    finally:
+        q.stop()
+    watch = [r["total_watch_time"] for r in rows]
+    assert watch and max(watch) == 307.41  # the clamped total, not 307.42
+
+
 def test_streaming_session_windows(spark, events_jsonl_dir):
     stream = _read_stream(spark, events_jsonl_dir)
     q = run_stream_to_memory(

@@ -325,3 +325,42 @@ def test_fold_groups_arrays_matches_fold_group(legacy):
             old[c].isna().values & new[c].isna().values
         )
         assert eq.all(), f"col {c} diverged"
+
+
+def test_watch_time_cents_rule():
+    from wistia_data_pipeline_project_spark.operators.fact import (
+        _watch_time_cents_py,
+    )
+
+    assert _watch_time_cents_py(307.415, 307.415) == 307.41  # not 307.42
+    assert _watch_time_cents_py(0.29, 0.29) == 0.29  # float floor gives 0.28
+    assert _watch_time_cents_py(2.675, 2.675) == 2.67
+    assert _watch_time_cents_py(12.345, 300.0) == 12.35  # below: half-up
+    assert _watch_time_cents_py(12.345, None) == 12.35
+
+
+def test_clamped_watch_time_never_exceeds_duration(spark):
+    """A clamped rewatch of a 307.415 s media stores 307.41 s in every
+    formulation (window, grouped-map fold, partition-scan fold) and in
+    the golden model: half-up alone would store 307.42 s."""
+    from tests.wistia_fixtures import CAPPED_DURATION, capped_rewatch
+    from wistia_data_pipeline_project_spark.operators.fact import (
+        fact_media_engagement_fold_scan,
+    )
+
+    media, events = capped_rewatch(MEDIA, EVENTS)
+    md = transform_media_data(
+        spark.createDataFrame(media, nullable_copy(WISTIA_MEDIA_SCHEMA)), RUN_TS
+    )
+    ev = spark.createDataFrame(events, nullable_copy(WISTIA_EVENT_SCHEMA))
+    (want,) = golden_fact(events, media, RUN_TS).values()
+    assert want["total_watch_time"] == 307.41
+    for build in (
+        fact_media_engagement,
+        fact_media_engagement_fold,
+        fact_media_engagement_fold_scan,
+    ):
+        (r,) = build(ev, md, RUN_TS).collect()
+        assert r.total_watch_time == 307.41 <= CAPPED_DURATION, build.__name__
+        assert r.play_rate == 1.0, build.__name__
+        assert r.play_count == 2, build.__name__

@@ -23,6 +23,13 @@ def round2(x: float) -> float:
     return float(Decimal(repr(float(x))).quantize(Decimal("0.01"), ROUND_HALF_UP))
 
 
+def floor2(x: float) -> float:
+    """Rounded DOWN to cents, in decimal over the shortest repr."""
+    from decimal import ROUND_FLOOR, Decimal
+
+    return float(Decimal(repr(float(x))).quantize(Decimal("0.01"), ROUND_FLOOR))
+
+
 def make_media(n: int = 12, seed: int = 7) -> list[dict]:
     rng = random.Random(seed)
     rows = []
@@ -330,9 +337,12 @@ def golden_fact(
             if ip and country:
                 break
 
+        watch = round2(total)
+        if duration is not None and watch > duration:
+            watch = floor2(duration)  # never above the duration
         out[key] = {
             "play_count": play_count,
-            "total_watch_time": round2(total),
+            "total_watch_time": watch,
             "max_percent_viewed": max(
                 (e["percent_viewed"] for e in evs if e["percent_viewed"] is not None),
                 default=None,
@@ -343,3 +353,30 @@ def golden_fact(
             "country": country,
         }
     return out
+
+
+CAPPED_DURATION = 307.415
+
+
+def capped_rewatch(media: list[dict], events: list[dict]) -> tuple[list[dict], list[dict]]:
+    """One media of 307.415 s that visitor ``vcap`` watches twice to
+    90 % on one day: the credited watch time (2 × 276.67 s) clamps to
+    the duration, whose half-up cents (307.42) lie above it."""
+    m = dict(media[0], id=9000, hashed_id="mcap", duration=CAPPED_DURATION)
+    t0 = dt.datetime(2025, 5, 3, 10, tzinfo=UTC)
+    evs = []
+    for i, (sec, pct, name) in enumerate(
+        [(0, 0.0, "play"), (300, 0.9, None), (400, 0.0, "play"), (700, 0.9, None)]
+    ):
+        evs.append(
+            dict(
+                events[0],
+                received_at=t0 + dt.timedelta(seconds=sec),
+                event_key=f"cap{i}",
+                media_id="mcap",
+                visitor_key="vcap",
+                percent_viewed=pct,
+                name=name,
+            )
+        )
+    return [m], evs

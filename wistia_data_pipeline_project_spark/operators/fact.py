@@ -31,6 +31,10 @@ Quirk resolution (SURVEY §2.6, engine defaults vs `legacy` flag):
   the delta by 100 again. Default: credit ``Δpct × duration``.
   ``legacy_percent_semantics=True`` reproduces ``Δpct/100 × duration``
   for byte-compat with the reference.
+- The duration clamp precedes the cents rounding; the stored watch
+  time is rounded so that it never exceeds the duration
+  (``_watch_time_cents``: half-up alone would store 307.42 s watched
+  of a 307.415 s video).
 
 Determinism: per-group ordering is (received_at, event_key) — the
 reference relied on file order (SURVEY §7 hard-part 2). The
@@ -42,7 +46,7 @@ irreproducible by design).
 from __future__ import annotations
 
 import datetime as dt
-from decimal import ROUND_HALF_UP, Decimal
+from decimal import ROUND_FLOOR, ROUND_HALF_UP, Decimal
 
 import pandas as pd
 
@@ -91,6 +95,18 @@ def _fold_input(events: DataFrame, dim_media: DataFrame) -> DataFrame:
         "country",
         F.col("duration").cast("double").alias("duration"),
     )
+
+
+def _watch_time_cents(wt, duration):
+    """Stored ``total_watch_time``: HALF_UP cents, never above the
+    duration. The clamp runs before the rounding, so a clamped value
+    can round up past a duration with a third decimal of 5 or more
+    (307.415 s → 307.42 s); such a value takes the duration rounded
+    DOWN to cents instead (307.41 s). Both roundings are decimal over
+    the double's shortest repr, like ``_round2``."""
+    r = F.round(wt, 2)
+    floor2 = F.floor(duration, F.lit(2)).cast("double")
+    return F.when(r > duration, floor2).otherwise(r)
 
 
 def fact_media_engagement(
@@ -186,7 +202,9 @@ def fact_media_engagement(
     out = (
         out.withColumn("play_count", play_count.cast("bigint"))
         .withColumn("_wt", F.when(F.col("play_count") > 0, clamped).otherwise(F.lit(0.0)))
-        .withColumn("total_watch_time", F.round(F.col("_wt"), 2))
+        .withColumn(
+            "total_watch_time", _watch_time_cents(F.col("_wt"), F.col("duration"))
+        )
         .withColumn(
             "play_rate",
             F.when(
@@ -228,6 +246,21 @@ def _round2(x: float) -> float:
     return float(
         Decimal(repr(float(x))).quantize(Decimal("0.01"), rounding=ROUND_HALF_UP)
     )
+
+
+def _watch_time_cents_py(total: float, duration: float | None) -> float:
+    """``_watch_time_cents`` for the Python folds: ``_round2``, then a
+    value above the duration takes the duration rounded DOWN to cents,
+    in decimal over the shortest repr (a float floor(d*100)/100 would
+    turn 0.29 into 0.28)."""
+    r = _round2(total)
+    if duration is not None and r > duration:
+        return float(
+            Decimal(repr(float(duration))).quantize(
+                Decimal("0.01"), rounding=ROUND_FLOOR
+            )
+        )
+    return r
 
 
 def _fold_group(
@@ -295,7 +328,9 @@ def _fold_group(
         "visitor_id": pdf["visitor_id"].iloc[0],
         "date": pdf["date"].iloc[0],
         "play_count": play_count,
-        "total_watch_time": _round2(total),
+        "total_watch_time": _watch_time_cents_py(
+            total, duration if has_duration else None
+        ),
         # all-null pct must surface as NULL (window parity: F.max
         # skips nulls), never as NaN leaking out of pandas
         "max_percent_viewed": (
@@ -435,7 +470,9 @@ def _fold_groups_arrays(
                 "visitor_id": visitor[a],
                 "date": datev[a],
                 "play_count": play_count,
-                "total_watch_time": _round2(total),
+                "total_watch_time": _watch_time_cents_py(
+                    total, duration if has_duration else None
+                ),
                 "max_percent_viewed": pmax,
                 "play_rate": play_rate,
                 "event_timestamp": pd.Timestamp(recv[a]),

@@ -15,21 +15,34 @@ Reference behaviors:
   (process_wistia_data_v2.py:81-83) — realized here as
   ``partitionBy("date")``.
 
-Scale: the fact table partitions by date so the HWM probe reads one
-partition's footer stats, increments append only new date partitions,
-and downstream date-range queries prune. Dims are small and
-overwritten whole.
+Scale: the fact table partitions by date so increments append only
+new date partitions and downstream date-range queries prune. Dims are
+small and overwritten whole.
+
+Run accounting without re-reads: each write carries a
+``DataFrame.observe`` (``pyspark.sql.Observation``), so its row count
+— and, for the fact, its max ``last_event_timestamp`` — arrive with
+the write job itself. The fact's stats are committed in the run's
+manifest (see the atomic append block), so the next run's HWM is a
+driver-side read of the commit log, not a scan; the returned counts
+are the observed ones, not re-count jobs.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, Observation, SparkSession, Window as W
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from wistia_data_pipeline_project_spark.ckpt import spill_checkpoint
+from wistia_data_pipeline_project_spark.schemas import (
+    DIM_VISITOR_SCHEMA,
+    FACT_MEDIA_ENGAGEMENT_SCHEMA,
+)
 
 HWM_OVERLAP = dt.timedelta(seconds=1)
 
@@ -109,9 +122,20 @@ def dedup_events(events: DataFrame, key_col: str = "event_key") -> DataFrame:
     )
 
 
-def write_dim(df: DataFrame, path: str) -> None:
-    """WRITE_TRUNCATE → full-refresh overwrite."""
+def _observed(df: DataFrame, *metrics) -> tuple[DataFrame, Observation]:
+    """``df`` with an Observation of its row count (``rows``) and of
+    ``metrics``, filled in by the first action that runs it — the
+    write — at no extra job."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("rows"), *metrics), obs
+
+
+def write_dim(df: DataFrame, path: str) -> int:
+    """WRITE_TRUNCATE → full-refresh overwrite. Returns the rows
+    written, observed on the write itself."""
+    df, obs = _observed(df)
     df.write.mode("overwrite").parquet(path)
+    return obs.get["rows"]
 
 
 def write_fact_append(df: DataFrame, path: str) -> None:
@@ -141,6 +165,15 @@ def write_fact_append(df: DataFrame, path: str) -> None:
 #      manifest-listed files, and the next run ROLLS BACK any data
 #      file no manifest claims.
 #
+# Manifest keys: ``run_id``, ``files`` (paths relative to the table),
+# and the run's stats observed on the staged write: ``rows`` (rows
+# committed) and ``hwm_us`` (max ``last_event_timestamp`` in epoch
+# micros; null when the run wrote no timestamp). The one-time legacy
+# manifest and manifests written before the stats existed carry only
+# ``run_id``/``files``; they still read, and any one of them sends the
+# HWM back to a scan of the committed files
+# (``committed_high_water_mark``).
+#
 # Object-store mapping: steps 1-2 become a conditional-PUT of objects
 # under a run prefix and step 3 a single manifest PUT — the same
 # commit point.
@@ -150,17 +183,22 @@ def _commits_dir(path: str) -> str:
     return os.path.join(path, "_commits")
 
 
-def list_committed_files(path: str) -> list[str]:
-    """Relative paths of every data file recorded by a committed run
-    manifest (driver-side metadata read — manifests are tiny)."""
+def read_manifests(path: str) -> list[dict]:
+    """Every committed run manifest of the table, in commit-name order
+    (driver-side metadata read — manifests are tiny)."""
     import glob as _glob
-    import json
 
-    out: list[str] = []
+    out = []
     for m in sorted(_glob.glob(os.path.join(_commits_dir(path), "*.json"))):
         with open(m) as fh:
-            out.extend(json.load(fh)["files"])
+            out.append(json.load(fh))
     return out
+
+
+def list_committed_files(path: str) -> list[str]:
+    """Relative paths of every data file recorded by a committed run
+    manifest."""
+    return [f for m in read_manifests(path) for f in m["files"]]
 
 
 def has_commit_log(path: str) -> bool:
@@ -173,16 +211,53 @@ def has_commit_log(path: str) -> bool:
 def read_fact_committed(spark: SparkSession, path: str) -> DataFrame | None:
     """The gated reader: only manifest-committed files. None when the
     table does not exist or has no committed data. ``basePath`` keeps
-    the ``date`` partition column alive on the explicit file list."""
+    the ``date`` partition column alive on the explicit file list; the
+    declared fact schema spares the schema-inference job."""
     if not os.path.exists(path):
         return None
+    reader = spark.read.schema(FACT_MEDIA_ENGAGEMENT_SCHEMA)
     if not has_commit_log(path):
-        return spark.read.parquet(path)  # legacy plain-append table
+        return reader.parquet(path)  # legacy plain-append table
     files = [os.path.join(path, f) for f in list_committed_files(path)]
     files = [f for f in files if os.path.exists(f)]
     if not files:
         return None
-    return spark.read.option("basePath", path).parquet(*files)
+    return reader.option("basePath", path).parquet(*files)
+
+
+def manifest_high_water_mark(path: str) -> tuple[bool, dt.datetime | None]:
+    """(usable, hwm) from the commit log alone: the max of the
+    manifests' ``hwm_us`` stats, as the datetime a scan would collect.
+    Not usable — the caller must scan — when the table has no commit
+    log, when any manifest lacks the stat (the legacy-migration
+    manifest, manifests written before the stats existed), or when a
+    listed file no longer exists (the stat would then cover rows the
+    committed view has lost)."""
+    if not has_commit_log(path):
+        return False, None
+    manifests = read_manifests(path)
+    if any("hwm_us" not in m for m in manifests) or not all(
+        os.path.exists(os.path.join(path, f)) for m in manifests for f in m["files"]
+    ):
+        return False, None
+    stats = [m["hwm_us"] for m in manifests if m["hwm_us"] is not None]
+    return True, T.TimestampType().fromInternal(max(stats)) if stats else None
+
+
+def committed_high_water_mark(
+    spark: SparkSession, path: str
+) -> dt.datetime | None:
+    """The HWM over the committed fact rows: the manifest stats when
+    every manifest carries one (no Spark job), else a scan of the
+    committed files. Both give the same value on every table."""
+    usable, hwm = manifest_high_water_mark(path)
+    if usable:
+        return hwm
+    committed = read_fact_committed(spark, path)
+    if committed is None:
+        return None
+    row = committed.agg(F.max("last_event_timestamp").alias("hwm")).head()
+    return row["hwm"] if row else None
 
 
 def rollback_uncommitted(path: str) -> dict[str, int]:
@@ -211,11 +286,12 @@ def rollback_uncommitted(path: str) -> dict[str, int]:
 
 def write_fact_append_atomic(df: DataFrame, path: str, run_id: str) -> int:
     """Stage → move → manifest-commit append (see block comment).
-    Returns the number of data files committed. A failure anywhere
-    before the final rename leaves the table's committed view
+    Returns the number of data files committed; the manifest also
+    records the staged write's observed ``rows`` and ``hwm_us`` (the
+    latter only when ``df`` has ``last_event_timestamp``). A failure
+    anywhere before the final rename leaves the table's committed view
     byte-identical; ``rollback_uncommitted`` reclaims the debris."""
     import glob as _glob
-    import json
     import shutil
 
     # one-time migration: a legacy table (plain appends, no _commits)
@@ -237,7 +313,11 @@ def write_fact_append_atomic(df: DataFrame, path: str, run_id: str) -> int:
             os.rename(tmp0, os.path.join(_commits_dir(path), "00000000-legacy.json"))
 
     stage = os.path.join(path, "_staging", run_id)
+    has_ts = "last_event_timestamp" in df.columns
+    hwm = [F.max(F.unix_micros("last_event_timestamp")).alias("hwm_us")]
+    df, obs = _observed(df, *(hwm if has_ts else []))
     df.write.mode("overwrite").partitionBy("date").parquet(stage)
+    stats = obs.get
     moved: list[str] = []
     for f in sorted(_glob.glob(os.path.join(stage, "*=*", "part-*"))):
         part_dir = os.path.basename(os.path.dirname(f))
@@ -251,7 +331,7 @@ def write_fact_append_atomic(df: DataFrame, path: str, run_id: str) -> int:
     manifest = os.path.join(_commits_dir(path), f"{run_id}.json")
     tmp = manifest + ".tmp"
     with open(tmp, "w") as fh:
-        json.dump({"run_id": run_id, "files": moved}, fh)
+        json.dump({"run_id": run_id, "files": moved, **stats}, fh)
     os.rename(tmp, manifest)  # THE commit point
     return len(moved)
 
@@ -367,28 +447,31 @@ def run_incremental_pipeline(
     """One scheduled run, end-to-end (entry point 1 shape,
     process_wistia_data.py:364-542): rollback of crashed runs → HWM →
     increment filter → dedup → dims overwrite → atomic fact append →
-    run-scoped contract. Returns row counts per table.
+    run-scoped contract. Returns row counts per table: ``dim_media``
+    and ``dim_visitor`` (rows written), ``fact_appended`` (rows this
+    run committed) and ``contract_passed``.
+
+    No Spark job runs only to count: the HWM is the max of the
+    manifests' ``hwm_us`` stats (``committed_high_water_mark``; a scan
+    of the committed files when a manifest lacks the stat or a listed
+    file is gone), and every count is an Observation on the write that
+    produced it. The pipeline's own tables are read with their
+    declared schemas, so no schema-inference job runs either.
 
     Crash safety: the fact append is manifest-committed
-    (``write_fact_append_atomic``), and HWM / counts read ONLY
-    committed files — a run that died mid-write contributes nothing
-    to the next run's state and its debris is reclaimed here first.
+    (``write_fact_append_atomic``), and the HWM reads ONLY committed
+    manifests and files — a run that died mid-write contributes neither
+    rows nor HWM to the next run's state, and its debris is reclaimed
+    here first.
     """
     from .dims import transform_media_data, transform_visitor_data
     from .fact import fact_media_engagement
+    from .quality import evaluate_expectations, not_null, unique
 
     fact_path = os.path.join(out_dir, "fact_media_engagement")
     if os.path.exists(fact_path):
         rollback_uncommitted(fact_path)
-    committed = read_fact_committed(spark, fact_path)
-    hwm = None
-    if committed is not None:
-        row = (
-            committed.filter(F.col("last_event_timestamp").isNotNull())
-            .agg(F.max("last_event_timestamp").alias("hwm"))
-            .head()
-        )
-        hwm = row["hwm"] if row else None
+    hwm = committed_high_water_mark(spark, fact_path)
     inc = dedup_events(filter_increment(events, hwm))
 
     dim_media = transform_media_data(media, run_ts)
@@ -398,22 +481,23 @@ def run_incremental_pipeline(
     vis_path = os.path.join(out_dir, "dim_visitor")
     if os.path.exists(vis_path):
         dim_visitor = spill_checkpoint(
-            merge_dim_visitor(spark.read.parquet(vis_path), dim_visitor),
+            merge_dim_visitor(
+                spark.read.schema(DIM_VISITOR_SCHEMA).parquet(vis_path), dim_visitor
+            ),
             eager=True,
         )
     fact = fact_media_engagement(inc, dim_media, run_ts)
 
-    write_dim(dim_media, os.path.join(out_dir, "dim_media"))
-    write_dim(dim_visitor, vis_path)
-    n_fact_before = committed.count() if committed is not None else 0
+    n_media = write_dim(dim_media, os.path.join(out_dir, "dim_media"))
+    n_visitor = write_dim(dim_visitor, vis_path)
     # unique run id: run_ts plus a manifest sequence number, so a
     # re-run at the same scheduled timestamp commits under its own
     # manifest instead of overwriting the previous run's file list
-    import glob as _glob
-
-    seq = len(_glob.glob(os.path.join(_commits_dir(fact_path), "*.json")))
+    seq = len(read_manifests(fact_path))
     run_id = f"{run_ts.strftime('%Y%m%dT%H%M%S')}-r{seq:04d}"
-    n_files = write_fact_append_atomic(fact, fact_path, run_id)
+    write_fact_append_atomic(fact, fact_path, run_id)
+    with open(os.path.join(_commits_dir(fact_path), f"{run_id}.json")) as fh:
+        run = json.load(fh)
     # post-load contract (quality.py), scoped to THIS RUN's rows: the
     # pipeline guarantees unique grain and non-NULL keys WITHIN a run
     # (dedup + aggregation); across runs a grain can legitimately
@@ -424,18 +508,14 @@ def run_incremental_pipeline(
     # asserted: like the reference's duration-lookup default, events
     # for media absent from the catalog still aggregate (left join),
     # so orphan facts are a monitored condition, not a load failure.
-    from .quality import not_null, run_expectations, unique
-
     contract_passed = 1
-    if n_files:
-        import json
-
-        with open(os.path.join(_commits_dir(fact_path), f"{run_id}.json")) as fh:
-            run_files = [
-                os.path.join(fact_path, f) for f in json.load(fh)["files"]
-            ]
-        written_run = spark.read.option("basePath", fact_path).parquet(*run_files)
-        contract = run_expectations(
+    if run["files"]:
+        written_run = (
+            spark.read.schema(FACT_MEDIA_ENGAGEMENT_SCHEMA)
+            .option("basePath", fact_path)
+            .parquet(*[os.path.join(fact_path, f) for f in run["files"]])
+        )
+        report = evaluate_expectations(
             written_run,
             [
                 unique(["media_id", "visitor_id", "date"]),
@@ -443,16 +523,11 @@ def run_incremental_pipeline(
                 not_null("visitor_id"),
             ],
         )
-        contract_passed = int(all(r["passed"] for r in contract.collect()))
-    written_fact = read_fact_committed(spark, fact_path)
-    written_dim = spark.read.parquet(os.path.join(out_dir, "dim_media"))
+        contract_passed = int(all(passed for _, passed, *_ in report))
     return {
-        "dim_media": written_dim.count(),
-        "dim_visitor": spark.read.parquet(vis_path).count(),
-        "fact_appended": (
-            (written_fact.count() if written_fact is not None else 0)
-            - n_fact_before
-        ),
+        "dim_media": n_media,
+        "dim_visitor": n_visitor,
+        "fact_appended": run["rows"],
         "contract_passed": contract_passed,
     }
 

@@ -4,17 +4,16 @@ dropping rows with missing keys at transform time,
 ``/root/reference/process_wistia_data_v2.py:374``).
 
 Each expectation is declarative and returns one report row
-(name, passed, metric, threshold, n_rows); ``run_expectations``
-evaluates a suite and returns the report as a DataFrame so it can be
-persisted next to the load (the audit trail a warehouse pipeline
-ships with).
+(name, passed, metric, threshold, n_rows); ``evaluate_expectations``
+returns a suite's report rows to the driver, and ``run_expectations``
+returns them as a DataFrame so the report can be persisted next to the
+load (the audit trail a warehouse pipeline ships with).
 
-Scale notes: ``not_null`` / ``accepted_values`` / ``bounds`` fold into
-ONE aggregate pass over a single scan (they are all conditional
-counts); ``unique`` adds one map-side-combinable distinct aggregate;
-``references`` is a broadcast-or-shuffle anti-join counting orphans.
-Nothing collects row-level data to the driver — only the scalar
-metrics move.
+Scale notes: ``not_null`` / ``accepted_values`` / ``bounds`` (conditional
+counts), ``unique`` (a distinct-key count) and ``freshness`` (a max)
+fold into ONE aggregate query over a single scan; ``references`` is a
+broadcast-or-shuffle anti-join counting orphans. Nothing collects
+row-level data to the driver — only the scalar metrics move.
 """
 
 from __future__ import annotations
@@ -94,26 +93,25 @@ def _frac(cond: Column) -> Column:
     return F.sum(F.when(cond, 1).otherwise(0)).cast("double") / F.count(F.lit(1))
 
 
-def run_expectations(df: DataFrame, suite: list[Expectation]) -> DataFrame:
-    """Evaluate a suite; returns (name, passed, metric, threshold,
-    n_rows) per expectation, IN SUITE ORDER (callers may zip the
-    report against their suite). Single-pass expectations share one
-    aggregate job; unique/references each add one.
+def evaluate_expectations(df: DataFrame, suite: list[Expectation]) -> list[tuple]:
+    """Evaluate a suite; returns one (name, passed, metric, threshold,
+    n_rows) tuple per expectation, IN SUITE ORDER (callers may zip the
+    report against their suite). Every kind but ``references`` folds
+    into ONE aggregate query over the input; each ``references`` adds
+    one anti-join count.
     """
-    spark = df.sparkSession
     n_rows = F.count(F.lit(1))
 
-    # one shared aggregation for the per-row predicates
-    agg_cols, meta = [], []
-    for idx, e in enumerate(suite):
+    # one shared aggregation: conditional counts for the per-row
+    # predicates, the distinct-key count for unique, the max for
+    # freshness
+    agg_cols: list[Column] = []
+    for e in suite:
         if e.kind == "not_null":
             agg_cols.append(_frac(F.col(e.params["col"]).isNull()))
-            meta.append((idx, e, float(e.params["max"])))
         elif e.kind == "accepted_values":
             c = F.col(e.params["col"])
-            bad = c.isNotNull() & ~c.isin(*e.params["values"])
-            agg_cols.append(_frac(bad))
-            meta.append((idx, e, 0.0))
+            agg_cols.append(_frac(c.isNotNull() & ~c.isin(*e.params["values"])))
         elif e.kind == "bounds":
             c = F.col(e.params["col"])
             lo, hi = e.params["lo"], e.params["hi"]
@@ -123,49 +121,41 @@ def run_expectations(df: DataFrame, suite: list[Expectation]) -> DataFrame:
             if hi is not None:
                 bad = bad | (c > F.lit(hi))
             agg_cols.append(_frac(c.isNotNull() & bad))
-            meta.append((idx, e, 0.0))
-    by_idx: dict[int, tuple] = {}
-    if agg_cols:
-        vals = df.agg(
-            n_rows.alias("_n"), *[c.alias(f"_m{i}") for i, c in enumerate(agg_cols)]
-        ).collect()[0]
-        total = vals["_n"]
-        for i, (idx, e, thresh) in enumerate(meta):
-            metric = float(vals[f"_m{i}"] or 0.0)
-            by_idx[idx] = (e.name, metric <= thresh, metric, thresh, total)
-    else:
-        total = df.count()
-
-    for idx, e in enumerate(suite):
-        if e.kind == "unique":
+        elif e.kind == "unique":
             cols = e.params["cols"]
-            r = df.agg(
-                n_rows.alias("_n"),
-                F.count_distinct(*[F.col(c) for c in cols]).alias("_d"),
-                F.sum(
-                    F.when(
-                        F.greatest(*[F.col(c).isNull() for c in cols])
-                        if len(cols) > 1
-                        else F.col(cols[0]).isNull(),
-                        1,
-                    ).otherwise(0)
-                ).alias("_nulls"),
-            ).collect()[0]
+            nulls = [F.col(c).isNull() for c in cols]
+            any_null = F.greatest(*nulls) if len(nulls) > 1 else nulls[0]
+            agg_cols.append(F.count_distinct(*[F.col(c) for c in cols]))
+            agg_cols.append(F.sum(F.when(any_null, 1).otherwise(0)))
+        elif e.kind == "freshness":
+            # the max as EPOCH MICROS, not a datetime: Spark renders a
+            # collected TimestampType in the DRIVER's OS timezone as a
+            # NAIVE datetime, so tz-normalizing it driver-side silently
+            # skews the lag by the host's UTC offset on non-UTC hosts.
+            # unix_micros is tz-unambiguous.
+            agg_cols.append(F.max(F.unix_micros(F.col(e.params["col"]))))
+    vals = df.agg(
+        n_rows.alias("_n"), *[c.alias(f"_m{i}") for i, c in enumerate(agg_cols)]
+    ).collect()[0]
+    total = vals["_n"]
+
+    report = []
+    m = iter(vals[1:])
+    for e in suite:
+        if e.kind in ("not_null", "accepted_values", "bounds"):
+            thresh = float(e.params["max"]) if e.kind == "not_null" else 0.0
+            metric = float(next(m) or 0.0)
+            report.append((e.name, metric <= thresh, metric, thresh, total))
+        elif e.kind == "unique":
+            distinct, nulls = next(m), next(m)
             # count_distinct skips NULL combos; compare against the
             # non-NULL row count so NULLs don't read as duplicates
-            dupes = (r["_n"] - r["_nulls"]) - r["_d"]
-            by_idx[idx] = (e.name, dupes == 0, float(dupes), 0.0, r["_n"])
+            dupes = (total - (nulls or 0)) - distinct
+            report.append((e.name, dupes == 0, float(dupes), 0.0, total))
         elif e.kind == "freshness":
-            # collect the max as EPOCH MICROS, not a datetime: Spark
-            # renders a collected TimestampType in the DRIVER's OS
-            # timezone as a NAIVE datetime, so tz-normalizing it
-            # driver-side silently skews the lag by the host's UTC
-            # offset on non-UTC hosts. unix_micros is tz-unambiguous.
-            r = df.agg(
-                F.max(F.unix_micros(F.col(e.params["col"]))).alias("_mx")
-            ).collect()[0]
+            mx = next(m)
             as_of = e.params["as_of"]
-            if r["_mx"] is None:
+            if mx is None:
                 lag_h = float("inf")
             else:
                 import datetime as _dt
@@ -175,13 +165,9 @@ def run_expectations(df: DataFrame, suite: list[Expectation]) -> DataFrame:
                 if getattr(as_of, "tzinfo", None) is None:
                     as_of = as_of.replace(tzinfo=_dt.timezone.utc)
                 as_of_us = as_of.timestamp() * 1_000_000.0
-                lag_h = (as_of_us - r["_mx"]) / 3_600_000_000.0
-            by_idx[idx] = (
-                e.name,
-                lag_h <= e.params["max"],
-                lag_h,
-                e.params["max"],
-                total,
+                lag_h = (as_of_us - mx) / 3_600_000_000.0
+            report.append(
+                (e.name, lag_h <= e.params["max"], lag_h, e.params["max"], total)
             )
         elif e.kind == "references":
             col, dim, dim_key = (
@@ -199,9 +185,15 @@ def run_expectations(df: DataFrame, suite: list[Expectation]) -> DataFrame:
                 )
                 .count()
             )
-            by_idx[idx] = (e.name, orphans == 0, float(orphans), 0.0, total)
+            report.append((e.name, orphans == 0, float(orphans), 0.0, total))
+    return report
 
-    return spark.createDataFrame(
-        [by_idx[i] for i in sorted(by_idx)],
+
+def run_expectations(df: DataFrame, suite: list[Expectation]) -> DataFrame:
+    """``evaluate_expectations`` as a DataFrame report (name, passed,
+    metric, threshold, n_rows), so it can be persisted next to the
+    load."""
+    return df.sparkSession.createDataFrame(
+        evaluate_expectations(df, suite),
         "name string, passed boolean, metric double, threshold double, n_rows long",
     )

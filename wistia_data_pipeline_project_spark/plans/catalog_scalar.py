@@ -1171,10 +1171,10 @@ def events_quality_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     epoch-micros subtraction+division, written identically in both
     engines — no summation-order ambiguity.
 
-    Scale: the per-row predicates fold into ONE map-side-combinable
-    aggregate pass; uniqueness adds one distinct aggregate; the
-    referential check is a broadcast anti-join against the dim. Only
-    scalar metrics reach the driver.
+    Scale: the per-row predicates, the uniqueness distinct count and
+    the freshness max fold into ONE aggregate query; the referential
+    check is a broadcast anti-join against the dim. Only scalar
+    metrics reach the driver.
     """
     import datetime as dt
 

@@ -954,7 +954,7 @@ def orders_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     # higher-order-function lambdas evaluate INTERPRETED and allocate
     # the full m×m struct array per basket before filtering; the
     # Generate form allocates nothing and stays in whole-stage codegen
-    # (measured r12: entry 1.78 → see OPTIMIZATION_r12.md).
+    # (plans before/after: plans/r12/orders_market_basket_*.txt).
     return (
         baskets.select(
             "_parts", F.posexplode("_parts").alias("_i", "part_a")

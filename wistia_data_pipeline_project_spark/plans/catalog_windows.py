@@ -1813,6 +1813,13 @@ STATEFUL_WATCH_SQL = """
            CAST(date AS TIMESTAMP) AS date,
            CAST(play_count AS BIGINT) AS play_count,
            CASE WHEN play_count = 0 THEN 0.0
+                WHEN CAST(CAST(CAST(capped AS VARCHAR) AS DECIMAL(30,2))
+                          AS DOUBLE) > duration
+                -- rounded up past the duration: the duration rounded
+                -- DOWN to cents (fact._watch_time_cents)
+                THEN CAST(floor(CAST(CAST(duration AS VARCHAR)
+                                     AS DECIMAL(38,18)) * 100) / 100
+                          AS DOUBLE)
                 ELSE CAST(CAST(CAST(capped AS VARCHAR) AS DECIMAL(30,2))
                           AS DOUBLE) END AS total_watch_time,
            max_pct AS max_percent_viewed,
@@ -1842,7 +1849,8 @@ def events_stateful_watch_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     anchor seeding on first progress, forward-credit
     min(elapsed, Δpct·duration), the 0.01 jitter tolerance, rewind
     re-anchoring, pause/end credit suppression, the duration cap, and
-    HALF_UP 2-decimal rounding — is replayed by the oracle's recursive
+    HALF_UP 2-decimal rounding that never lands above the duration —
+    is replayed by the oracle's recursive
     CTE in the identical IEEE operation sequence.
 
     Scale: one shuffle on the (media, visitor, date) group key into

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..operators.fact import _round2
+from ..operators.fact import _watch_time_cents_py
 
 
 def streaming_daily_engagement(
@@ -319,10 +319,11 @@ def streaming_watch_time(
                     "visitor_id": key[1],
                     "date": key[2],
                     "play_count": play_count,
-                    # HALF_UP like the batch fold (fact._round2);
-                    # built-in round() is half-to-even and diverges on
-                    # exact halves, breaking stream/batch parity
-                    "total_watch_time": _round2(capped),
+                    # HALF_UP cents capped at the duration, like the
+                    # batch folds; built-in round() is half-to-even and
+                    # diverges on exact halves, breaking stream/batch
+                    # parity
+                    "total_watch_time": _watch_time_cents_py(capped, duration),
                     "max_percent_viewed": max_pct,
                     "event_timestamp": to_ts(first_ts_us),
                     "last_event_timestamp": to_ts(last_ts_us),
